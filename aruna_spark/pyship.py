@@ -13,10 +13,15 @@ distributes the zip to every executor and prepends it to the worker's
 ``sys.path``. This is also exactly what a real 1000-executor deployment
 needs (``spark-submit --py-files``); calling it lazily from each UDF-backed
 operator makes the library self-contained no matter who owns the session.
+
+The zip is deleted when the driver process exits, not after ``addPyFile``:
+executors fetch it from the driver whenever they first need it.
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
 import tempfile
 import zipfile
@@ -42,5 +47,11 @@ def ensure_package_shipped(spark: SparkSession) -> None:
                 if f.endswith(".py"):
                     full = os.path.join(dirpath, f)
                     z.write(full, os.path.relpath(full, root))
+    atexit.register(_remove, zpath)
     sc.addPyFile(zpath)
     _SHIPPED.add(key)
+
+
+def _remove(path: str) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(path)

@@ -573,15 +573,13 @@ def search_perfield_rank_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aruna_spark.store import merged_postings_store
 
     toks = validate_query(QUERY_TEXT)
-    merged, mdl, mstats, mdf = merged_postings_store(spark, sf_dir)
+    merged, mstats = merged_postings_store(spark, sf_dir)
     pf = _scored(spark, sf_dir, QUERY_TEXT)
     mg = bm25_scores_field_merged(
         None,
         toks,
         merged=merged.filter(shard_filter(toks)).drop("shard"),
-        dl=mdl,
         stats=mstats,
-        df_=mdf,
     )
     def _ranked(scored: DataFrame, score_name: str, rank_name: str):
         top = (

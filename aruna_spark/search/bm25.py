@@ -202,16 +202,19 @@ def bm25_scores(
 
     r16: when ``postings`` already carries on-row ``df`` and ``dl``
     columns (the materialized index denormalizes them at build/upsert
-    time — see ``incremental.with_scoring_columns``), scoring skips the
-    df aggregation and both per-row joins: pruned scan → broadcast
-    token join → broadcast stats join → one groupBy."""
+    time — see ``incremental._write_leaves``) and no ``dl`` is passed,
+    scoring skips the df aggregation and both per-row joins: pruned
+    scan → broadcast token join → broadcast stats join → one groupBy.
+    An explicitly passed ``dl`` takes precedence over on-row columns."""
     spark = postings.sparkSession
-    onrow = "df" in postings.columns and "dl" in postings.columns
-    if dl is None and not onrow:
-        dl = build_doc_lengths(postings)
+    onrow = dl is None and {"df", "dl"} <= set(postings.columns)
+    if not onrow:
+        postings = postings.drop("df", "dl")
+        if dl is None:
+            dl = build_doc_lengths(postings)
     if stats is None:
         stats = build_field_stats(
-            dl if dl is not None else build_doc_lengths(postings)
+            build_doc_lengths(postings) if onrow else dl
         )
     q = spark.createDataFrame(
         [(t,) for t in dict.fromkeys(query_tokens)], "token string"
@@ -261,18 +264,21 @@ def bm25_scores_field_merged(
     when querying the materialized merged layout. r16: a ``merged``
     relation carrying on-row ``df``/``dl`` columns (the materialized
     merged store denormalizes them at build time) skips both per-row
-    joins, like :func:`bm25_scores`."""
+    joins, like :func:`bm25_scores`, unless ``dl`` or ``df_`` is passed:
+    an explicit table takes precedence over on-row columns."""
     if merged is None:
         merged = build_merged_postings(postings)
     spark = merged.sparkSession
-    onrow = "df" in merged.columns and "dl" in merged.columns
-    if dl is None and not onrow:
-        dl = merged.groupBy("subject").agg(F.sum("tf").alias("dl"))
+    onrow = dl is None and df_ is None and {"df", "dl"} <= set(merged.columns)
+    if not onrow:
+        merged = merged.drop("df", "dl")
+        if dl is None:
+            dl = merged.groupBy("subject").agg(F.sum("tf").alias("dl"))
     if stats is None:
         base_dl = (
-            dl
-            if dl is not None
-            else merged.groupBy("subject").agg(F.sum("tf").alias("dl"))
+            merged.groupBy("subject").agg(F.sum("tf").alias("dl"))
+            if onrow
+            else dl
         )
         stats = base_dl.agg(
             F.count(F.lit(1)).alias("n"),

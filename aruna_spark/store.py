@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 # Bump when any materialized layout changes shape (postings schema,
 # partitioning, sort) so stale caches rebuild instead of mis-reading.
-LAYOUT_VERSION = "v8-onrow-df-dl"
+LAYOUT_VERSION = "v9-sized-fanout"
 
 
 def _repo_root() -> str:
@@ -138,20 +138,6 @@ def postings_table(spark: SparkSession, sf_dir: str):
     return VersionedTable(os.path.join(dest, "table"))
 
 
-def postings_store(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(postings, dl, stats) pinned to the versioned index's latest
-    manifest — a snapshot: concurrent maintenance commits new versions,
-    this read never sees them mid-query."""
-    from aruna_spark.search.incremental import read_aux
-
-    table = postings_table(spark, sf_dir)
-    version = table.latest_version()
-    dl, stats = read_aux(spark, table, version)
-    return table.read(spark, version), dl, stats
-
-
 def bm25_scored(
     spark: SparkSession, sf_dir: str, query: str
 ) -> DataFrame:
@@ -170,53 +156,46 @@ def bm25_scored(
     table = postings_table(spark, sf_dir)
     version = table.latest_version()
     pruned = read_pruned(spark, table, token_shards(spark, toks), version)
-    dl, stats = read_aux(spark, table, version)
-    return bm25_scores(pruned.drop("shard"), toks, dl=dl, stats=stats)
+    _, stats = read_aux(spark, table, version)
+    return bm25_scores(pruned, toks, stats=stats)
 
 
 def merged_postings_store(
     spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame]:
     """The field-MERGED BM25 index (round-2 scorer, kept for the
     rank-shift comparison query) as a stored layout: token-shard
-    partitioned merged postings + per-doc lengths + corpus stats + token
-    df — previously re-derived from the per-field postings on every
+    partitioned merged postings with on-row dl/df + corpus stats —
+    previously re-derived from the per-field postings on every
     ``search_perfield_rank_shift`` run."""
     from pyspark.sql import functions as F
 
     from aruna_spark.search.bm25 import build_merged_postings, materialize_postings
+    from aruna_spark.search.incremental import read_snapshot
 
     def build(tmp: str) -> None:
         from pyspark.sql import Window
 
-        postings, _, _ = postings_store(spark, sf_dir)
-        merged = build_merged_postings(
-            postings.drop("dl", "df", "shard")
-        )
+        postings = read_snapshot(spark, postings_table(spark, sf_dir))
+        merged = build_merged_postings(postings.drop("dl", "df"))
         dl = merged.groupBy("subject").agg(F.sum("tf").alias("dl"))
         # r16: denormalize dl + df onto the merged rows (the per-field
         # index does the same at init/upsert — incremental.
-        # with_scoring_columns), so the rank-shift query's merged leg
+        # _write_leaves), so the rank-shift query's merged leg
         # scores with zero per-row joins
         merged_scored = merged.join(dl, "subject").withColumn(
             "df", F.count(F.lit(1)).over(Window.partitionBy("token"))
         )
         materialize_postings(merged_scored, os.path.join(tmp, "merged"))
-        dl.coalesce(1).write.parquet(os.path.join(tmp, "dl"))
         dl.agg(
             F.count(F.lit(1)).alias("n"),
             (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
         ).coalesce(1).write.parquet(os.path.join(tmp, "stats"))
-        merged.groupBy("token").agg(
-            F.count(F.lit(1)).alias("df")
-        ).coalesce(1).write.parquet(os.path.join(tmp, "df"))
 
     dest = _ensure("bm25_merged", sf_dir, build)
     return (
         spark.read.parquet(os.path.join(dest, "merged")),
-        spark.read.parquet(os.path.join(dest, "dl")),
         spark.read.parquet(os.path.join(dest, "stats")),
-        spark.read.parquet(os.path.join(dest, "df")),
     )
 
 

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+from collections import Counter
 from pathlib import Path
 
 import pytest
@@ -21,3 +22,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def _skip_reason(report) -> str:
+    longrepr = report.longrepr
+    reason = longrepr[2] if isinstance(longrepr, tuple) else str(longrepr)
+    return reason.removeprefix("Skipped: ")
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Print the skip count with its reasons grouped, so skipped tests
+    stay visible in a ``-q`` run."""
+    skipped = terminalreporter.stats.get("skipped", [])
+    if not skipped:
+        return
+    terminalreporter.section(f"{len(skipped)} skipped")
+    for reason, n in Counter(map(_skip_reason, skipped)).most_common():
+        terminalreporter.write_line(f"{n:4d}  {reason}")

@@ -4,9 +4,11 @@ rewrites and snapshot isolation (``aruna_spark/search/incremental.py``).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from aruna_spark.ingest.doc_triples import load_triples
+from aruna_spark.search import incremental
 from aruna_spark.search.bm25 import build_field_literals, build_postings
 from aruna_spark.search.incremental import (
     _SHARD_RE,
@@ -37,7 +39,11 @@ def _split_fields(spark, sf_dir):
     return fields, base, changed
 
 
-def test_incremental_upsert_equals_full_rebuild(spark, sf_dir, tmp_path):
+def test_incremental_upsert_equals_full_rebuild(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    # 256 shards, so the carry-over assertion below has shards to carry
+    monkeypatch.setattr(incremental, "SHARD_ROWS", 0)
     fields, base, changed = _split_fields(spark, sf_dir)
     # v0: index WITHOUT the changed docs
     table = init_postings_table(
@@ -81,16 +87,19 @@ def test_incremental_delete(spark, sf_dir, tmp_path):
     )
 
 
-def test_manifest_level_shard_pruning(spark, sf_dir, tmp_path):
+def test_manifest_level_shard_pruning(spark, sf_dir, tmp_path, monkeypatch):
+    # 256 shards, so pruning to one of them excludes the others
+    monkeypatch.setattr(incremental, "SHARD_ROWS", 0)
     fields, _, _ = _split_fields(spark, sf_dir)
     postings = build_postings(fields)
     table = init_postings_table(spark, postings, str(tmp_path / "idx"))
+    n = table._manifest(0)["shards"]
     # pick a real token and prune to its shard
     row = postings.select("token").first()
     shard = (
         spark.range(1)
         .select(
-            F.pmod(F.xxhash64(F.lit(row.token)), F.lit(256))
+            F.pmod(F.xxhash64(F.lit(row.token)), F.lit(n))
             .cast("int")
             .alias("s")
         )
@@ -101,7 +110,7 @@ def test_manifest_level_shard_pruning(spark, sf_dir, tmp_path):
     assert row.token in got
     # every token in the pruned read hashes to the pruned shard
     check = pruned.select(
-        F.pmod(F.xxhash64("token"), F.lit(256)).cast("int").alias("s")
+        F.pmod(F.xxhash64("token"), F.lit(n)).cast("int").alias("s")
     ).distinct()
     assert {r.s for r in check.collect()} == {shard}
 
@@ -347,3 +356,187 @@ def test_onrow_scoring_columns_match_recomputation(spark, sf_dir, tmp_path):
     for r in rows:
         assert r.dl == exp_dl[(r.subject, r.field)], (r.subject, r.field)
         assert r["df"] == exp_df[(r.field, r.token)], (r.field, r.token)
+
+
+def test_fanout_is_sized_to_the_index():
+    from aruna_spark.search.incremental import BUCKETS, SHARD_ROWS, fanout
+
+    assert fanout(0) == 1
+    assert fanout(SHARD_ROWS) == 1
+    assert fanout(SHARD_ROWS + 1) == 2
+    assert fanout(5 * SHARD_ROWS) == 8
+    assert fanout(10**12) == BUCKETS
+
+
+_WORDS = [f"w{i}" for i in range(48)]
+_FIELDS = ("name", "description", "keywords", "identifier")
+
+
+def _random_doc(rng):
+    return {
+        f: " ".join(rng.choice(_WORDS) for _ in range(rng.randint(1, 6)))
+        for f in rng.sample(_FIELDS, rng.randint(1, 3))
+    }
+
+
+def _model_postings(spark, docs):
+    """Postings of ``docs`` ({subject: (graph, {field: text})})."""
+    rows = [
+        (s, g, f, text)
+        for s, (g, fields) in sorted(docs.items())
+        for f, text in fields.items()
+    ]
+    return build_postings(
+        spark.createDataFrame(
+            rows, "subject string, graph_iri string, field string, text string"
+        )
+    )
+
+
+def _index_state(spark, table):
+    """(postings rows with on-row dl/df, dl sidecar, stats sidecar)."""
+    from aruna_spark.search.incremental import read_aux, read_snapshot
+
+    def rows(df, *cols):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    dl, stats = read_aux(spark, table)
+    return (
+        rows(
+            read_snapshot(spark, table),
+            "subject", "graph_iri", "field", "token", "tf", "dl", "df",
+        ),
+        rows(dl, "subject", "field", "dl"),
+        rows(stats, "field", "n", "avgdl"),
+    )
+
+
+def _fanouts(table):
+    return [
+        table._manifest(v).get("shards", incremental.BUCKETS)
+        for v in table.versions()
+    ]
+
+
+# SHARD_ROWS forcing each fan-out for the test corpus (None: a quarter of
+# the initial row count, so growth crosses from 4 to 8 shards)
+_FORCED = {"1": 10**9, "4": None, "256": 0, "legacy": 0}
+
+
+@pytest.mark.parametrize("mode", list(_FORCED))
+def test_random_batches_equal_full_rebuild(spark, tmp_path, monkeypatch, mode):
+    """Property: init plus random upsert/delete batches leaves the same
+    index as a rebuild of the final corpus — postings, on-row dl/df and
+    both sidecars — at fan-outs 1, 4 (growing past a boundary) and 256,
+    and from a manifest written before the fan-out key existed."""
+    import json
+    import random
+
+    from aruna_spark.search.incremental import (
+        compact_postings,
+        read_pruned,
+        read_snapshot,
+        token_shards,
+    )
+
+    rng = random.Random(f"upsert-batches-{mode}")
+    model = {f"urn:d:{i}": (f"g:{i}", _random_doc(rng)) for i in range(40)}
+    rows0 = _model_postings(spark, model).count()
+    forced = _FORCED[mode]
+    monkeypatch.setattr(
+        incremental, "SHARD_ROWS", -(-rows0 // 4) if forced is None else forced
+    )
+    table = init_postings_table(
+        spark, _model_postings(spark, model), str(tmp_path / "idx")
+    )
+    want_n = {"1": 1, "4": 4, "256": 256, "legacy": 256}[mode]
+    assert table._manifest(0)["shards"] == want_n
+    if mode == "legacy":
+        log0 = tmp_path / "idx" / "_log" / "0.json"
+        m = json.loads(log0.read_text())
+        del m["shards"]
+        log0.write_text(json.dumps(m))
+        monkeypatch.setattr(incremental, "SHARD_ROWS", 65_536)
+
+    next_id = len(model)
+    # growth, growth (the fan-out-4 run re-sizes here), mixed, pure delete
+    for n_new, n_upd, n_del in ((24, 2, 1), (16, 2, 2), (3, 3, 3), (0, 0, 4)):
+        batch = {}
+        for _ in range(n_new):
+            batch[f"urn:d:{next_id}"] = (f"g:{next_id}", _random_doc(rng))
+            next_id += 1
+        olds = rng.sample(sorted(model), n_upd + n_del)
+        for s in olds[:n_upd]:
+            batch[s] = (model[s][0], _random_doc(rng))
+        for s in olds[n_upd:]:
+            del model[s]
+        model.update(batch)
+        upsert_postings(
+            table,
+            spark,
+            _model_postings(spark, batch),
+            spark.createDataFrame([(s,) for s in olds], "subject string"),
+        )
+
+    rebuilt = init_postings_table(
+        spark, _model_postings(spark, model), str(tmp_path / "rebuilt")
+    )
+    want = _index_state(spark, rebuilt)
+    assert _index_state(spark, table) == want
+    if mode == "4":
+        assert {4, 8} <= set(_fanouts(table)), _fanouts(table)
+        # query-time pruning reduces 256-bucket ids to the version's n
+        snapshot = read_snapshot(spark, table)
+        for t in _WORDS[:6]:
+            pruned = read_pruned(spark, table, token_shards(spark, [t]))
+            got, full = (
+                sorted(map(tuple, df.filter(F.col("token") == t).collect()))
+                for df in (pruned, snapshot)
+            )
+            assert full and got == full, t
+    if mode == "legacy":
+        assert _fanouts(table)[0] == 256
+
+    # compaction re-sizes the fan-out and changes no data
+    monkeypatch.setattr(incremental, "SHARD_ROWS", 65_536)
+    compact_postings(table, spark)
+    assert _fanouts(table)[-1] == 1
+    assert len(table.files()) == 1
+    assert _index_state(spark, table) == want
+
+
+def test_upsert_refuses_snapshot_without_onrow_scoring(spark, tmp_path):
+    """A snapshot written before the on-row dl/df columns cannot be
+    upserted into: the upsert names the rebuild instead of failing
+    inside Spark's unionByName."""
+    import os
+
+    from aruna_spark.ops.versioned import VersionedTable
+    from aruna_spark.search.bm25 import build_doc_lengths
+    from aruna_spark.search.incremental import _write_aux
+    from aruna_spark.store import LAYOUT_VERSION
+
+    docs = {"urn:d:1": ("g:1", {"name": "alpha beta"})}
+    postings = _model_postings(spark, docs)
+    path = str(tmp_path / "idx")
+    postings.withColumn(
+        "shard", F.pmod(F.xxhash64("token"), F.lit(256)).cast("int")
+    ).write.partitionBy("shard").parquet(os.path.join(path, "part-old"))
+    table = VersionedTable(path)
+    leaves = sorted(
+        f"part-old/{d}"
+        for d in os.listdir(os.path.join(path, "part-old"))
+        if d.startswith("shard=")
+    )
+    aux = _write_aux(table, build_doc_lengths(postings))
+    table._commit_manifest(leaves, "overwrite", 0, extra={"aux": aux})
+    batch = {"urn:d:2": ("g:2", {"name": "gamma"})}
+    with pytest.raises(ValueError, match="rebuild required") as err:
+        upsert_postings(
+            table,
+            spark,
+            _model_postings(spark, batch),
+            spark.createDataFrame([("urn:d:2",)], "subject string"),
+        )
+    assert LAYOUT_VERSION in str(err.value)
+    assert table.latest_version() == 0

@@ -144,15 +144,35 @@ def test_default_sparql_path_prunes_predicate_partitions(spark, sf_dir):
     assert "contentSize" in plan.split("PartitionFilters:", 1)[1][:400]
 
 
-def test_default_search_path_prunes_token_shards(spark, sf_dir):
+def test_default_search_path_prunes_token_shards(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """The DEFAULT registered search_* path must read ONLY the query
     tokens' shard leaves of the pinned versioned-postings manifest —
     manifest-level pruning, stronger than scan-time PartitionFilters:
-    the non-matching 200+ shards never even enter the file index
-    (VERDICT r2 perf-weak item a; r4 Next #2 versioned substrate)."""
+    the non-matching shards never even enter the file index (VERDICT
+    r2 perf-weak item a; r4 Next #2 versioned substrate). The test
+    corpus sizes to one shard, so the index is rebuilt here at the full
+    256-way fan-out, where a whole-snapshot read would show."""
+    from aruna_spark import store
     from aruna_spark.queries.search import QUERY_TEXT
-    from aruna_spark.search.bm25 import tokenize
+    from aruna_spark.search import incremental
+    from aruna_spark.search.bm25 import (
+        build_field_literals,
+        build_postings,
+        tokenize,
+    )
     from aruna_spark.search.incremental import _SHARD_RE, token_shards
+
+    monkeypatch.setattr(incremental, "SHARD_ROWS", 0)
+    postings = build_postings(
+        build_field_literals(store.triples_store(spark, sf_dir))
+    )
+    table = incremental.init_postings_table(
+        spark, postings, str(tmp_path / "idx")
+    )
+    assert table._manifest(0)["shards"] == incremental.BUCKETS
+    monkeypatch.setattr(store, "postings_table", lambda *_: table)
 
     fn, _ = REGISTRY["search_bm25_topk"]
     df = fn(spark, sf_dir)
@@ -162,6 +182,7 @@ def test_default_search_path_prunes_token_shards(spark, sf_dir):
     seen = {int(_SHARD_RE.search(f).group(1)) for f in postings_files}
     assert seen <= expected, f"read shards {seen - expected} beyond the query's"
     assert len(seen) <= len(tokenize(QUERY_TEXT))
+    assert len(table.files()) > len(seen)
 
 
 def test_trained_ivf_never_trains_on_query_path(spark, sf_dir, monkeypatch):

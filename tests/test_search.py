@@ -9,6 +9,7 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from aruna_spark.queries import REGISTRY, load_all
@@ -282,6 +283,67 @@ def test_materialized_postings_prune_and_match(spark, sf_dir, tmp_path):
     )
     assert "PartitionFilters: [" in plan
     assert a == b
+
+
+def test_explicit_dl_takes_precedence_over_onrow_columns(
+    spark, sf_dir, tmp_path
+):
+    """Both scorers use on-row dl/df only when no dl (or df_) table is
+    passed: the same dl scores the same, a different dl changes the
+    score instead of being silently ignored."""
+    from aruna_spark.ingest.doc_triples import load_triples
+    from aruna_spark.search.bm25 import (
+        bm25_scores,
+        bm25_scores_field_merged,
+        build_field_literals,
+        build_merged_postings,
+        build_postings,
+    )
+    from aruna_spark.search.incremental import (
+        init_postings_table,
+        read_aux,
+        read_snapshot,
+    )
+
+    table = init_postings_table(
+        spark,
+        build_postings(build_field_literals(load_triples(spark, sf_dir))),
+        str(tmp_path / "idx"),
+    )
+    onrow = read_snapshot(spark, table)
+    dl, stats = read_aux(spark, table)
+    toks = ["doc", "collection"]
+
+    def scores(df):
+        return {(r.subject, r.score_q) for r in df.collect()}
+
+    base = scores(bm25_scores(onrow, toks, stats=stats))
+    assert base
+    assert scores(bm25_scores(onrow, toks, dl=dl, stats=stats)) == base
+    doubled = dl.withColumn("dl", F.col("dl") * 2)
+    assert scores(bm25_scores(onrow, toks, dl=doubled, stats=stats)) != base
+
+    merged = build_merged_postings(onrow.drop("dl", "df"))
+    mdl = merged.groupBy("subject").agg(F.sum("tf").alias("dl"))
+    merged_onrow = merged.join(mdl, "subject").withColumn(
+        "df", F.count(F.lit(1)).over(Window.partitionBy("token"))
+    )
+    mstats = mdl.agg(
+        F.count(F.lit(1)).alias("n"),
+        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
+    )
+
+    def merged_scores(**tables):
+        return scores(
+            bm25_scores_field_merged(
+                None, toks, merged=merged_onrow, stats=mstats, **tables
+            )
+        )
+
+    mbase = merged_scores()
+    assert mbase
+    assert merged_scores(dl=mdl) == mbase
+    assert merged_scores(dl=mdl.withColumn("dl", F.col("dl") * 2)) != mbase
 
 
 def test_keyset_walk_property_random_ties(spark):
