@@ -322,7 +322,7 @@ class Engine:
         )
         return rows[0]
 
-    def _resolve_one(
+    def _resolution(
         self,
         bucket: str,
         key: str,
@@ -362,7 +362,7 @@ class Engine:
         mine = self._versions().filter(
             (F.col("bucket") == bucket) & (F.col("key") == key)
         )
-        return resolve_requests(mine, req).collect()[0]
+        return resolve_requests(mine, req)
 
     def get_object(
         self,
@@ -379,7 +379,7 @@ class Engine:
         If-Match / If-None-Match conditionals, StartEnd / Suffix byte
         ranges. Returns the resolution row — ``status`` carries the S3
         semantics (200/206/304/412/416/404)."""
-        return self._resolve_one(
+        return self._resolution(
             bucket,
             key,
             version_id,
@@ -388,7 +388,7 @@ class Engine:
             range_start,
             range_end,
             range_suffix,
-        )
+        ).collect()[0]
 
     def head_object(
         self,
@@ -402,28 +402,31 @@ class Engine:
         parameters, and the row carries no content_range. A by-reference
         head additionally surfaces its source binding + cache envelope
         (head_object.rs:276-290: source_metadata Some, last_refresh
-        Some, location/version_created_at None)."""
-        row = self._resolve_one(
-            bucket, key, version_id, if_match, if_none_match, None, None, None
-        )
-        d = row.asDict()
-        d.pop("content_range", None)
-        ref = (
+        Some, location/version_created_at None). One Spark action: the
+        binding is left-joined onto the resolution row."""
+        binding = ("source_kind", "source_path", "connector_id", "last_refresh")
+        refs = (
             self._references()
             .filter((F.col("bucket") == bucket) & (F.col("key") == key))
-            .collect()
-        )
-        if ref:
-            r = ref[0]
-            d.update(
-                referenced=True,
-                source_kind=r.source_kind,
-                source_path=r.source_path,
-                connector_id=r.connector_id,
-                content_type=r.cached_content_type,
-                last_refresh=r.last_refresh,
+            .select(
+                "bucket",
+                "key",
+                F.lit(True).alias("referenced"),
+                *binding,
+                F.col("cached_content_type").alias("content_type"),
             )
-        else:
+        )
+        row = (
+            self._resolution(
+                bucket, key, version_id, if_match, if_none_match, None, None, None
+            )
+            .join(refs, ["bucket", "key"], "left")
+            .drop("content_range")
+            .collect()[0]
+        )
+        d = row.asDict()
+        if not d["referenced"]:
+            d = {k: v for k, v in d.items() if k not in (*binding, "content_type")}
             d["referenced"] = False
         return d
 

@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aruna_spark.catalog import load_table
+from aruna_spark.catalog import load_table, read_parquet
 from aruna_spark.sparql.terms import RDF, SCHEMA, XSD_INTEGER
 
 DOC_NS = "urn:aruna:doc:"
@@ -249,7 +249,7 @@ def materialize_triples(triples: DataFrame, path: str) -> None:
 
 def load_materialized_triples(spark: SparkSession, path: str) -> DataFrame:
     """Read a materialized triples table back in canonical column order."""
-    return spark.read.parquet(path).select(*TRIPLE_COLS)
+    return read_parquet(spark, path).select(*TRIPLE_COLS)
 
 
 def materialize_triples_bucketed(

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from aruna_spark.catalog import read_parquet
 from aruna_spark.sparql.terms import SCHEMA
 
 K1 = 1.2
@@ -393,7 +394,7 @@ def materialize_postings(postings: DataFrame, path: str) -> None:
 def load_materialized_postings(spark, path: str) -> DataFrame:
     """Read a materialized postings index; queries should filter with
     :func:`shard_filter` so scans prune to the query tokens' shards."""
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def shard_filter(tokens: list[str]) -> Column:

@@ -10,7 +10,18 @@ survive a 1000-executor cluster at 100 TB:
 - Arrow on, so any unavoidable pandas-UDF path is batch-vectorized;
 - broadcast threshold left at default 10 MB; dimension tables (region,
   nation, supplier at our SFs) broadcast automatically, and operators that
-  know a side is small call ``F.broadcast`` explicitly.
+  know a side is small call ``F.broadcast`` explicitly;
+- PySpark's per-call call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled``): with it on, every
+  ``F.*``/Column call costs ~5 extra py4j round trips (active-session
+  lookup, a conf read, the JVM origin set and clear), about three
+  quarters of the round trips of a point query's plan build, and its
+  only effect is the Python call site in Spark error context. PySpark
+  reads the flag once per process, at the first wrapped call after a
+  session exists, so it must be set here, before any Column is built;
+- zstd parquet: the maintained layouts are many small files (index
+  leaves, sidecars), which zstd writes smaller than snappy. Readers are
+  codec-agnostic, so layouts written with either codec read the same.
 """
 
 from __future__ import annotations
@@ -42,6 +53,8 @@ def get_spark(app_name: str = "aruna-spark", shuffle_partitions: int | None = No
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.parquet.compression.codec", "zstd")
     )
     # Only force local mode when no master is configured anywhere (submit
     # args, spark-defaults, env). On a real cluster the configured master

@@ -17,7 +17,9 @@ left_anti on shared vars.
 Scale notes: BGP self-joins are equi-joins on struct keys — Catalyst
 chooses broadcast vs sort-merge per side size, AQE re-plans at runtime.
 Property-path closures iterate delta-joins with ``localCheckpoint`` to cut
-lineage; iterations are bounded (default 25 ≈ graph diameter cap).
+lineage; each round's new-pair count is observed on its checkpoint job
+(``DataFrame.observe``), so the loop stops on an empty frontier without a
+probe job, and iterations are bounded (default 25 ≈ graph diameter cap).
 """
 
 from __future__ import annotations
@@ -25,7 +27,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from aruna_spark.ops.mat import DISK_ONLY
@@ -657,10 +659,6 @@ class Compiler:
                     for part in p.parts]
             return reduce(self._union, rels)
         if isinstance(p, A.PathNegated):
-            df = self.triples
-            if isinstance(graph, A.Iri):
-                df = df.filter(F.col("graph_iri") == graph.value)
-            df = df.filter(~F.col("predicate").isin(*p.iris))
             rel = self._triple_pattern(A.TriplePattern(tp.s, A.Var("__negp"), tp.o), graph)
             return Rel(
                 rel.df.filter(~rel.df["__negp"]["value"].isin(*p.iris)).drop("__negp"),
@@ -741,10 +739,15 @@ class Compiler:
                     .distinct()
                 )
                 closure_so_far = reduce(DataFrame.unionByName, deltas)
-                new = step.join(
-                    closure_so_far, ["src", "dst"], "left_anti"
-                ).localCheckpoint(eager=True, storageLevel=DISK_ONLY)
-                if not new.take(1):
+                # the round's row count is observed on the checkpoint's
+                # own job, so an empty frontier costs no probe job
+                seen = Observation()
+                new = (
+                    step.join(closure_so_far, ["src", "dst"], "left_anti")
+                    .observe(seen, F.count(F.lit(1)).alias("rows"))
+                    .localCheckpoint(eager=True, storageLevel=DISK_ONLY)
+                )
+                if not seen.get["rows"]:
                     break
                 deltas.append(new)
                 frontier = new
@@ -806,8 +809,6 @@ class Compiler:
                 # OPTIONAL with no shared vars: every left row pairs with
                 # every right row; empty right keeps left with nulls.
                 df = left.df.crossJoin(right.df)
-                missing = left.df.join(right.df.limit(1), how="left_anti",
-                                       on=None) if False else None
                 # crossJoin with empty right yields nothing — emulate left
                 # semantics by unioning unmatched left rows back in.
                 right_vars = sorted(right.variables)

@@ -33,6 +33,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from aruna_spark.catalog import read_parquet
+
 # Bump when any materialized layout changes shape (postings schema,
 # partitioning, sort) so stale caches rebuild instead of mis-reading.
 LAYOUT_VERSION = "v9-sized-fanout"
@@ -194,8 +196,8 @@ def merged_postings_store(
 
     dest = _ensure("bm25_merged", sf_dir, build)
     return (
-        spark.read.parquet(os.path.join(dest, "merged")),
-        spark.read.parquet(os.path.join(dest, "stats")),
+        read_parquet(spark, os.path.join(dest, "merged")),
+        read_parquet(spark, os.path.join(dest, "stats")),
     )
 
 
@@ -257,7 +259,7 @@ def vectors_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     dest = _ensure("vectors", sf_dir, build, src_name="embeddings.parquet")
-    return spark.read.parquet(os.path.join(dest, "vectors"))
+    return read_parquet(spark, os.path.join(dest, "vectors"))
 
 
 def ivf_trained_store(
@@ -311,7 +313,7 @@ def ivf_trained_store(
         os.path.join(dest, "centroids.json"), encoding="utf-8"
     ) as f:
         cents = {int(c): v for c, v in json.load(f).items()}
-    assigned = spark.read.parquet(os.path.join(dest, "assigned"))
+    assigned = read_parquet(spark, os.path.join(dest, "assigned"))
     return cents, assigned
 
 
@@ -355,7 +357,7 @@ def lsh_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.partitionBy("tbl").parquet(os.path.join(tmp, "buckets"))
 
     dest = _ensure("lsh", sf_dir, build, src_name="embeddings.parquet")
-    return spark.read.parquet(os.path.join(dest, "buckets"))
+    return read_parquet(spark, os.path.join(dest, "buckets"))
 
 
 def ivf_fixed_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -382,7 +384,7 @@ def ivf_fixed_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     dest = _ensure("ivf_fixed", sf_dir, build, src_name="embeddings.parquet")
-    return spark.read.parquet(os.path.join(dest, "assigned"))
+    return read_parquet(spark, os.path.join(dest, "assigned"))
 
 
 def ivf_scaled_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -416,7 +418,7 @@ def ivf_scaled_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     dest = _ensure(
         "ivf_scaled", sf_dir, build, src_name="embeddings.parquet"
     )
-    return spark.read.parquet(os.path.join(dest, "assigned"))
+    return read_parquet(spark, os.path.join(dest, "assigned"))
 
 
 def pq_store(
@@ -479,7 +481,7 @@ def pq_store(
             for k, v in json.load(f).items()
         }
     cents, _ = ivf_trained_store(spark, sf_dir)
-    codes = spark.read.parquet(os.path.join(dest, "codes"))
+    codes = read_parquet(spark, os.path.join(dest, "codes"))
     return cents, cb, codes
 
 
@@ -517,9 +519,9 @@ def rep_lsh_store(
 
     dest = _ensure("rep_lsh", sf_dir, build)
     return (
-        spark.read.parquet(os.path.join(dest, "reps")),
-        spark.read.parquet(os.path.join(dest, "sets")),
-        spark.read.parquet(os.path.join(dest, "bands")),
+        read_parquet(spark, os.path.join(dest, "reps")),
+        read_parquet(spark, os.path.join(dest, "sets")),
+        read_parquet(spark, os.path.join(dest, "bands")),
     )
 
 
@@ -541,7 +543,7 @@ def lsh_band_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     dest = _ensure("lsh_bands", sf_dir, build)
-    return spark.read.parquet(os.path.join(dest, "bands"))
+    return read_parquet(spark, os.path.join(dest, "bands"))
 
 
 def shingle_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -568,7 +570,7 @@ def shingle_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.parquet(os.path.join(tmp, "sets"))
 
     dest = _ensure("shingles", sf_dir, build)
-    return spark.read.parquet(os.path.join(dest, "sets"))
+    return read_parquet(spark, os.path.join(dest, "sets"))
 
 
 def held_buckets_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -589,7 +591,7 @@ def held_buckets_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     dest = _ensure("held_buckets", sf_dir, build, src_name="nation.parquet")
-    return spark.read.parquet(os.path.join(dest, "held"))
+    return read_parquet(spark, os.path.join(dest, "held"))
 
 
 def ngram_prefix_store(
@@ -622,7 +624,7 @@ def ngram_prefix_store(
 
     kind = "rep_ngram_prefix" if collapsed else "ngram_prefix"
     dest = _ensure(kind, sf_dir, build)
-    return spark.read.parquet(os.path.join(dest, "prefix"))
+    return read_parquet(spark, os.path.join(dest, "prefix"))
 
 
 def ivf_sqrt_store(spark: SparkSession, sf_dir: str):
@@ -691,4 +693,4 @@ def ivf_sqrt_store(spark: SparkSession, sf_dir: str):
     dest = _ensure("ivf_sqrt", sf_dir, build, src_name="embeddings.parquet")
     with open(os.path.join(dest, "meta.json"), encoding="utf-8") as f:
         n_cells = json.load(f)["n_cells"]
-    return n_cells, spark.read.parquet(os.path.join(dest, "assigned"))
+    return n_cells, read_parquet(spark, os.path.join(dest, "assigned"))

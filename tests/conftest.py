@@ -24,6 +24,22 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+@pytest.fixture
+def collect_calls(spark, monkeypatch) -> list:
+    """Records every ``DataFrame.collect`` made while the test runs, one
+    list entry per call; clear it to start a new count."""
+    cls = type(spark.range(1))
+    collect = cls.collect
+    calls: list = []
+
+    def counting(self):
+        calls.append(self)
+        return collect(self)
+
+    monkeypatch.setattr(cls, "collect", counting)
+    return calls
+
+
 def _skip_reason(report) -> str:
     longrepr = report.longrepr
     reason = longrepr[2] if isinstance(longrepr, tuple) else str(longrepr)

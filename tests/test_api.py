@@ -373,7 +373,7 @@ def test_put_object_route(engine):
     assert dup.version_idx == 0 and dup.deduplicated
 
 
-def test_get_head_object_routes(engine):
+def test_get_head_object_routes(engine, collect_calls):
     obj = _some_object(engine)
     got = engine.get_object(obj.key)
     assert (got.status, got.etag, got.content_length) == (
@@ -395,9 +395,12 @@ def test_get_head_object_routes(engine):
     assert sfx.status == 206 and sfx.content_length == min(4, obj.size)
     # missing key -> 404
     assert engine.get_object("data/not/there.txt").status == 404
-    # HEAD: same resolution, no content_range key
+    # HEAD: same resolution, no content_range key, one Spark action
+    collect_calls.clear()
     head = engine.head_object(obj.key)
+    assert len(collect_calls) == 1
     assert head["status"] == 200 and head["etag"] == obj.etag
+    assert head["content_length"] == obj.size and not head["referenced"]
     assert "content_range" not in head
     with pytest.raises(ValueError):
         engine.get_object(obj.key, range_start=0)  # StartEnd needs end

@@ -49,14 +49,19 @@ def test_reference_rows_carry_no_blob(spark, sf_dir):
     )
 
 
-def test_head_reference_surfaces_cache(engine, one_ref):
+def test_head_reference_surfaces_cache(engine, one_ref, collect_calls):
     d = engine.head_object(one_ref.key, bucket="staging")
+    # the resolution and the reference binding come back in one action
+    assert len(collect_calls) == 1
     assert d["status"] == 200 and d["referenced"]
     assert d["etag"] == one_ref.cached_etag
     assert d["content_length"] == one_ref.cached_length
     assert d["source_kind"] == one_ref.source_kind
     assert d["source_path"] == one_ref.source_path
+    assert d["connector_id"] == one_ref.connector_id
+    assert d["content_type"] == one_ref.cached_content_type
     assert d["last_refresh"] == one_ref.last_refresh
+    assert "content_range" not in d
     # conditionals evaluate against the CACHED etag
     assert (
         engine.head_object(one_ref.key, bucket="staging", if_match="wrong")[
@@ -64,10 +69,13 @@ def test_head_reference_surfaces_cache(engine, one_ref):
         ]
         == 412
     )
-    # a materialized head is not referenced
-    assert not engine.head_object(one_ref.key + ".nope", bucket="staging")[
-        "referenced"
-    ]
+    # an unknown key is a 404 that is not referenced and carries no
+    # binding fields
+    collect_calls.clear()
+    missing = engine.head_object(one_ref.key + ".nope", bucket="staging")
+    assert len(collect_calls) == 1
+    assert missing["status"] == 404 and not missing["referenced"]
+    assert "source_kind" not in missing and "content_type" not in missing
 
 
 def test_get_object_attributes_reference_branch(engine, one_ref):
